@@ -54,7 +54,7 @@ if __package__ in (None, ""):
 
 from ocr_spark.schema import MANIFEST_SCHEMA, OUTPUT_SCHEMA
 from ocr_spark.sources.io import read_input, validate_input_schema, write_output
-from ocr_spark.udfs import extract_batch, extract_udf
+from ocr_spark.udfs import drop_zip_finders, extract_batch, extract_udf
 
 DEFAULT_SALT_THRESHOLD = 2000  # turns per conv before salting kicks in
 DEFAULT_N_SALTS = 16
@@ -209,6 +209,7 @@ def _make_runner(acc, shard: int):
                     }
                 ]
             )
+            drop_zip_finders()
 
     return run
 

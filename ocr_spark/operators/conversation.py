@@ -27,6 +27,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ocr_spark.udfs import drop_zip_finders
+
 ROLLUP_SCHEMA = StructType(
     [
         StructField("conv_id", StringType()),
@@ -94,7 +96,7 @@ def conv_rollup_grouped(transcripts: DataFrame) -> DataFrame:
         lens = pdf["text"].str.len()
         # match native sum(length(text)): nulls skipped, all-null → NULL
         total_chars = int(lens.sum()) if lens.notna().any() else None
-        return pd.DataFrame(
+        out = pd.DataFrame(
             {
                 "conv_id": [pdf["conv_id"].iloc[0]],
                 "n_turns": [len(pdf)],
@@ -106,6 +108,8 @@ def conv_rollup_grouped(transcripts: DataFrame) -> DataFrame:
                 "total_chars": [total_chars],
             }
         )
+        drop_zip_finders()
+        return out
 
     return (
         transcripts.select("conv_id", "turn_idx", "role", "text")

@@ -31,6 +31,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ocr_spark.udfs import drop_zip_finders
+
 MEDIA_SCHEMA = StructType(
     [
         StructField("doc_id", LongType()),
@@ -108,6 +110,7 @@ def extract_media_features(media: DataFrame) -> DataFrame:
                     ],
                 }
             )
+        drop_zip_finders()
 
     return media.mapInPandas(run, FEATURE_SCHEMA)
 
@@ -156,6 +159,7 @@ def resize_images(media: DataFrame, max_side: int = 64) -> DataFrame:
                     "resized_width", "resized_height", "thumbnail",
                 ],
             )
+        drop_zip_finders()
 
     return media.filter(F.col("media_type") == "image/png").mapInPandas(
         run, RESIZE_SCHEMA
@@ -185,6 +189,7 @@ def sample_frames(media: DataFrame, n_frames: int = 4) -> DataFrame:
                         (int(doc_id), i, hashlib.md5(window.encode("utf-8")).hexdigest())
                     )
             yield pd.DataFrame(rows, columns=["doc_id", "frame_idx", "frame_checksum"])
+        drop_zip_finders()
 
     return media.filter(F.col("media_type") == "video/mp4").mapInPandas(
         run, FRAME_SCHEMA

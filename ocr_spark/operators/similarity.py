@@ -523,7 +523,8 @@ def ivf_topk_seeded(
         .orderBy("vec_id")
         .collect()
     )
-    cents = [[float(x) for x in r["embedding"]] for r in seeds]
+    # only the first ``dim`` coordinates take part in any distance
+    cents = [[float(x) for x in r["embedding"][:dim]] for r in seeds]
 
     def dist_exprs(col: str) -> list[Column]:
         return [
@@ -555,7 +556,7 @@ def ivf_topk_seeded(
                 F.col("_cents"),
                 lambda c: F.aggregate(
                     F.zip_with(
-                        F.col(col).cast("array<double>"),
+                        F.slice(F.col(col).cast("array<double>"), 1, dim),
                         c,
                         lambda a, b: F.pow(a - b, F.lit(2.0)),
                     ),

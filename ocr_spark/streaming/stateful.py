@@ -33,6 +33,7 @@ from pyspark.sql.types import (
 )
 
 from ocr_spark.schema import TRANSCRIPT_SCHEMA
+from ocr_spark.udfs import drop_zip_finders
 
 PROGRESS_STATE_SCHEMA = StructType(
     [
@@ -77,6 +78,7 @@ def _track(
             "max_turn_idx": [max_turn],
         }
     )
+    drop_zip_finders()
 
 
 def conv_progress_stream(

@@ -213,6 +213,37 @@ def test_ivf_seeded_assignment_paths_bit_identical(spark):
     assert len(inline) == 8 * 3
 
 
+def test_ivf_seeded_assignment_paths_agree_below_embedding_length(spark):
+    """``dim`` shorter than the stored embedding: the broadcast-data
+    path folds only the first ``dim`` terms, like the inline path, so
+    both assign the same cells. The tail dims carry most of the spread,
+    so folding them in would move most assignments."""
+    from pyspark.sql import functions as F
+
+    dim, length = 3, 8
+    emb = spark.range(400).select(
+        F.col("id").alias("vec_id"),
+        F.transform(
+            F.sequence(F.lit(1), F.lit(length)),
+            lambda i: (
+                F.pmod(F.xxhash64(F.col("id"), i), F.lit(1000)).cast("double")
+                * F.when(i <= dim, F.lit(0.01)).otherwise(F.lit(1.0))
+            ).cast("float"),
+        ).alias("embedding"),
+    )
+
+    def rows(inline_max_cells: int) -> list[tuple]:
+        out = ivf_topk_seeded(
+            emb, n_queries=40, k=3, n_cells=24, n_probe=1, dim=dim,
+            inline_max_cells=inline_max_cells,
+        )
+        return sorted(map(tuple, out.collect()))
+
+    inline, data = rows(256), rows(4)
+    assert inline == data
+    assert {r[0] for r in inline} == set(range(40))
+
+
 def test_ivf_seeded_large_cell_count_no_codegen_blowup(spark):
     """n_cells = 1024 through the broadcast-data path: the expression
     tree is constant-size (centroids are DATA), so a cell count that
