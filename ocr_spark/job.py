@@ -222,22 +222,11 @@ def _write_manifest_local(rows: list[dict], dest: str) -> None:
     with an object-store destination this stays a driver-side put."""
     import pyarrow as pa
     import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
 
     os.makedirs(dest, exist_ok=True)
-    cols = [f.name for f in MANIFEST_SCHEMA.fields]
-    int_cols = {f.name for f in MANIFEST_SCHEMA.fields if f.dataType.typeName() != "string"}
-    arrays = [
-        pa.array(
-            [r[c] for r in rows],
-            type=pa.int64()
-            if c in int_cols and c not in ("shard", "partition_id", "attempt")
-            else (
-                pa.int32() if c in ("shard", "partition_id", "attempt") else pa.string()
-            ),
-        )
-        for c in cols
-    ]
-    pq.write_table(pa.table(dict(zip(cols, arrays))), os.path.join(dest, "part-0.parquet"))
+    table = pa.Table.from_pylist(rows, schema=to_arrow_schema(MANIFEST_SCHEMA))
+    pq.write_table(table, os.path.join(dest, "part-0.parquet"))
 
 
 def _marker_path(checkpoint_dir: str, shard: int) -> str:

@@ -5,6 +5,8 @@ the live-tested branch and the Iceberg branch is skip-guarded)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from ocr_spark.plans.session import iceberg_runtime_available
@@ -103,3 +105,39 @@ def test_compact_parquet_preserves_rows_and_reduces_files(spark, tmp_path):
     assert after == before
     assert not _os.path.exists(path + ".compact_old")
     assert not _os.path.exists(path + ".compact_staging")
+
+
+# compact_parquet recovers a leftover .compact_old at entry: a crash
+# between the two swap renames must not strand the table.
+def _rows(spark, path):
+    return sorted(r["v"] for r in spark.read.parquet(path).collect())
+
+
+def test_compact_recovers_mid_swap_crash(spark, tmp_path):
+    from ocr_spark.sources.io import compact_parquet
+
+    path = str(tmp_path / "t")
+    spark.range(100).withColumnRenamed("id", "v").repartition(6).write.parquet(path)
+    # simulate a crash BETWEEN the two renames: live path gone, data
+    # stranded at .compact_old
+    os.replace(path, path + ".compact_old")
+    assert not os.path.exists(path)
+    stats = compact_parquet(spark, path, target_file_mb=256)
+    assert stats["files_after"] == 1
+    assert _rows(spark, path) == list(range(100))
+    assert not os.path.exists(path + ".compact_old")
+
+
+def test_compact_discards_stale_old_after_completed_swap(spark, tmp_path):
+    from ocr_spark.sources.io import compact_parquet
+
+    path = str(tmp_path / "t")
+    spark.range(50).withColumnRenamed("id", "v").repartition(4).write.parquet(path)
+    # simulate a crash AFTER the swap, before cleanup: live path is the
+    # new data, .compact_old is a superseded copy (different content so
+    # a wrong recovery direction would be caught)
+    stale = path + ".compact_old"
+    spark.range(5).withColumnRenamed("id", "v").write.parquet(stale)
+    compact_parquet(spark, path, target_file_mb=256)
+    assert _rows(spark, path) == list(range(50))
+    assert not os.path.exists(stale)

@@ -9,6 +9,7 @@ from __future__ import annotations
 import math
 import re
 
+import duckdb
 from pyspark.sql import functions as F
 
 from ocr_spark.operators.corpus import (
@@ -487,3 +488,51 @@ def test_weighted_sample_clamp_stats_quantifies_distortion(spark):
     assert r["weight_mass_raw"] == 40 + 16 - 3 + 5
     # clamped: 16 + 16 + (NULL: least(NULL,16)=16 both engines) + 1 + 5
     assert r["weight_mass_clamped"] == 16 + 16 + 16 + 1 + 5
+
+
+# conv_dedup coalesces NULL turn text to '' on both engines (NULL text
+# is an empty turn; all-NULL conversations group instead of getting a
+# NULL fingerprint).
+def test_conv_dedup_null_text_parity(spark, tmp_path):
+    from ocr_spark.operators.conversation import conv_dedup
+    from ocr_spark.queries import _conv_dedup_sql
+
+    ts = "2026-01-01 00:00:00"
+    rows = [
+        # all-NULL-text conv + its all-empty twin: must share one fp
+        ("c_null", 0, "user", None, None, ts),
+        ("c_null", 1, "assistant", None, None, ts),
+        ("c_empty", 0, "user", "", None, ts),
+        ("c_empty", 1, "assistant", "", None, ts),
+        # mixed NULL mid-conversation
+        ("c_mixed", 0, "user", "hello", None, ts),
+        ("c_mixed", 1, "assistant", None, None, ts),
+        ("c_mixed", 2, "user", "bye", None, ts),
+        # distinct conv — must NOT collide with c_mixed
+        ("c_other", 0, "user", "hello", None, ts),
+        ("c_other", 1, "assistant", "x", None, ts),
+        ("c_other", 2, "user", "bye", None, ts),
+    ]
+    df = spark.createDataFrame(
+        rows,
+        "conv_id string, turn_idx int, role string, text string, "
+        "tool string, ts string",
+    ).withColumn("ts", F.col("ts").cast("timestamp"))
+    got = {r["conv_id"]: r for r in conv_dedup(df).collect()}
+
+    # NULL ≡ '' pins the group; fps are non-NULL everywhere
+    assert got["c_null"]["conv_fp"] == got["c_empty"]["conv_fp"]
+    assert got["c_null"]["n_dup_convs"] == 2
+    assert got["c_null"]["is_keeper"] is False  # c_empty < c_null
+    assert all(r["conv_fp"] is not None for r in got.values())
+    assert got["c_mixed"]["conv_fp"] != got["c_other"]["conv_fp"]
+
+    p = str(tmp_path / "convs.parquet")
+    df.coalesce(1).write.parquet(p)
+    oracle = duckdb.sql(
+        _conv_dedup_sql(p + "/*.parquet")
+    ).fetchall()
+    ora = {r[0]: r for r in oracle}
+    for cid, row in got.items():
+        assert ora[cid][1] == row["conv_fp"], cid
+        assert ora[cid][3] == row["n_dup_convs"], cid

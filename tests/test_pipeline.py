@@ -8,9 +8,14 @@ size, or resume path.
 
 from __future__ import annotations
 
+import os
+
+import duckdb
 import pandas as pd
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ocr_spark.core.extract import extract_turn
 from ocr_spark.fixtures import gen_transcripts
@@ -21,6 +26,7 @@ from ocr_spark.job import (
     run_extraction,
     with_skew_salt,
 )
+from ocr_spark.schema import MANIFEST_SCHEMA
 
 
 def _oracle_frame(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -156,6 +162,8 @@ def test_job_end_to_end_with_manifest(spark, transcripts_path, oracle, tmp_path)
     assert (m["status"] == "ok").all()
     assert m["bytes_in"].sum() == oracle["bytes_in"].sum()
     assert m["blocks_kept"].sum() == oracle["blocks_kept"].sum()
+    part = os.path.join(out, "_manifest", "shard=0", "part-0.parquet")
+    assert pq.read_schema(part) == to_arrow_schema(MANIFEST_SCHEMA)
 
 
 def test_resume_after_crash_no_duplicates(spark, transcripts_path, oracle, tmp_path):
@@ -581,3 +589,34 @@ def test_pdf_report_sink(spark, transcripts_path, tmp_path):
 
     with pytest.raises(ValueError, match="max_rows"):
         write_pdf_report(piv, dest, max_rows=1)
+
+
+# skew_report surfaces NULL keys under the '<null>' sentinel, in parity
+# with the DuckDB oracle shape (NULL ordering and concat-drop semantics
+# differ between the engines otherwise).
+def test_skew_report_null_key_parity(spark, tmp_path):
+    from ocr_spark.operators.relational import skew_report
+
+    # NULL is the HOT key — exactly the case the diagnostic must show
+    rows = [(None,)] * 7 + [("a",)] * 3 + [("b",)] * 3 + [("c",)] * 1
+    df = spark.createDataFrame(rows, "k string")
+    got = skew_report(df, "k", top_n=3).collect()[0]
+    assert got["n_rows"] == 14
+    assert got["n_keys"] == 4
+    assert got["max_count"] == 7
+    # NULL surfaces as the sentinel, counted, and first (hottest)
+    assert got["top_keys"] == "<null>:7,a:3,b:3"
+
+    # DuckDB twin of the oracle shape on the same data
+    p = str(tmp_path / "skew.parquet")
+    df.coalesce(1).write.parquet(p)
+    oracle = duckdb.sql(
+        f"""
+WITH c AS (SELECT k, count(*) AS c FROM read_parquet('{p}/*.parquet') GROUP BY 1),
+top AS (SELECT coalesce(CAST(k AS VARCHAR), '<null>') AS ks, c FROM c
+        ORDER BY c DESC, coalesce(CAST(k AS VARCHAR), '<null>') ASC LIMIT 3)
+SELECT string_agg(ks || ':' || CAST(c AS VARCHAR), ',' ORDER BY c DESC, ks ASC)
+FROM top
+"""
+    ).fetchone()[0]
+    assert oracle == got["top_keys"]

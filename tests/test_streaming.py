@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -321,3 +322,27 @@ def test_incremental_dedup_probe_reads_only_batch_buckets(spark, tmp_path):
         for r in spark.read.parquet(os.path.join(out, "epoch=1")).collect()
     }
     assert v == {100: "dup_index", 101: "novel"}
+
+
+# incremental_dedup_batch_fn refuses object-store paths loudly: its
+# os.listdir-based marker discovery would silently see an empty index
+# there and emit all-novel verdicts.
+@pytest.mark.parametrize(
+    "bad", ["s3://bucket/index", "hdfs://nn:8020/index", "file:///tmp/index"]
+)
+def test_incremental_dedup_rejects_remote_paths(spark, tmp_path, bad):
+    from ocr_spark.streaming.extract_stream import incremental_dedup_batch_fn
+
+    with pytest.raises(ValueError, match="LOCAL"):
+        incremental_dedup_batch_fn(spark, bad, str(tmp_path / "out"))
+    with pytest.raises(ValueError, match="LOCAL"):
+        incremental_dedup_batch_fn(spark, str(tmp_path / "idx"), bad)
+
+
+def test_incremental_dedup_accepts_local_paths(spark, tmp_path):
+    from ocr_spark.streaming.extract_stream import incremental_dedup_batch_fn
+
+    fn = incremental_dedup_batch_fn(
+        spark, str(tmp_path / "idx"), str(tmp_path / "out")
+    )
+    assert callable(fn)
